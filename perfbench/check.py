@@ -3,13 +3,11 @@
 Registry outputs are compared with their DuckDB twins from
 `oracle_sql()` the way `tests/oracle_harness.py` compares them: the
 harness's DuckDB views and cell normalisation, then column names, row
-count and an order-insensitive hash of the normalised rows. Entries
-without a twin must return rows, as in the harness.
+count and the sorted normalised rows. Entries without a twin must
+return rows, as in the harness.
 """
 
 from __future__ import annotations
-
-import hashlib
 
 from tests.oracle_harness import _norm_rows
 from tests.oracle_harness import duck_connection as _harness_connection
@@ -23,29 +21,27 @@ def duck_connection(sf_dir: str):
     return con
 
 
-def rows_digest(cols: list[str], rows) -> tuple[int, str]:
-    """Row count and order-insensitive hash of harness-normalised rows."""
-    norm = _norm_rows(cols, [tuple(r) for r in rows])
-    return len(norm), hashlib.sha256(repr(norm).encode()).hexdigest()
+def same_rows(cols_a: list[str], rows_a, cols_b: list[str], rows_b) -> bool:
+    """Whether two row sets are equal as multisets after the harness's
+    normalisation (which sorts them)."""
+    return _norm_rows(cols_a, [tuple(r) for r in rows_a]) == _norm_rows(cols_b, [tuple(r) for r in rows_b])
 
 
-def against_oracle(con, sql: str | None, cols: list[str], rows) -> list[str]:
-    """Problems found comparing collected Spark rows with the DuckDB
-    result of `sql` (empty list = match)."""
+def against_oracle(con, sql: str | None, got) -> list[str]:
+    """Problems found comparing collected Spark output (`cols`, `rows`)
+    with the DuckDB result of `sql` (empty list = match)."""
     if sql is None:
-        return [] if len(rows) else ["rows-only check: Spark returned 0 rows"]
+        return [] if len(got.rows) else ["rows-only check: Spark returned 0 rows"]
     res = con.execute(sql)
     duck_cols = [d[0] for d in res.description]
     duck_rows = res.fetchall()
-    if sorted(cols) != sorted(duck_cols):
-        return [f"columns differ: spark={sorted(cols)} duck={sorted(duck_cols)}"]
-    (n_s, h_s), (n_d, h_d) = rows_digest(cols, rows), rows_digest(duck_cols, duck_rows)
-    problems = []
-    if n_s != n_d:
-        problems.append(f"row count differs: spark={n_s} duck={n_d}")
-    elif h_s != h_d:
-        problems.append("values differ (order-insensitive hash)")
-    return problems
+    if sorted(got.cols) != sorted(duck_cols):
+        return [f"columns differ: spark={sorted(got.cols)} duck={sorted(duck_cols)}"]
+    if len(got.rows) != len(duck_rows):
+        return [f"row count differs: spark={len(got.rows)} duck={len(duck_rows)}"]
+    if not same_rows(got.cols, got.rows, duck_cols, duck_rows):
+        return ["values differ after normalisation"]
+    return []
 
 
 def planted_pairs_found(planted: list[tuple[int, int]], found: set[tuple[int, int]]) -> int:

@@ -37,7 +37,7 @@ import pyarrow.parquet as pq
 
 SIZES: dict[str, dict[str, int]] = {
     "dashboard": {"events": 100_000, "users": 1_500, "documents": 200, "embeddings": 200},
-    "curation": {"events": 2_000, "users": 200, "documents": 5_000, "embeddings": 1_000},
+    "curation": {"events": 2_000, "users": 200, "documents": 3_000, "embeddings": 600},
     "feed_ingest": {
         "events": 2_000,
         "users": 1_500,

@@ -1,16 +1,17 @@
 """Benchmark of the monitoring engine: one command, three workloads.
 
-    python3 perfbench/run.py --workload dashboard --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload dashboard --seed 1 --seconds 5 --trace 0
 
 Run from the root of a checkout. The command generates the workload's
 inputs from `--seed` under `.perfbench_work/`, starts a `local[nproc]`
 session sized for the host, runs a cold first pass whose outputs are
 checked against the DuckDB oracles and the generator's ground truth
 (outside the timed region), and drives the workload in a closed loop
-for `--seconds` seconds (at least one unit per client). The timed
-units are the first warm ones, so JIT compilation is still settling in
-them: a cold set-up plus more warm units per run would not fit the
-benchmark's time budget on a 4-core host.
+for `--seconds` seconds and until each client has run the workload's
+minimum number of units (two dashboard refreshes, one curation or feed
+pass). The timed units are the first warm ones, so JIT compilation is
+still settling in them: a cold set-up plus more warm units per run
+would not fit the benchmark's time budget on a 4-core host.
 
 The last line of standard output is one JSON object: `correct`,
 `attempted`, `failed` and `metrics`. The line before it is a report
@@ -24,10 +25,15 @@ End-to-end metrics (`--trace 0`), one meaning per workload:
 - `setup_s`: session start plus the cold first pass.
 - `pass_s.p50`: median unit latency: a dashboard refresh, a curation
   pass, a feed replay pass.
-- `items_per_s`: refreshes/s over all clients, curation docs/s, feed
-  events/s.
-- `peak_rss_mb`: lifetime peak RSS (VmHWM) of the Spark driver JVM plus
-  the Python process, read from /proc after the timed loop.
+- `items_per_s`: refreshes/s over all clients' wall clock, curation
+  docs/s, feed events/s. The single-client workloads time one pass a
+  run, so there it is the pass's size divided by `pass_s.p50`: the same
+  measurement under the unit a user reads.
+- `peak_rss_mb`: peak RSS (VmHWM) of the Spark driver JVM plus the
+  Python process over the timed loop: both peaks are reset through
+  /proc/<pid>/clear_refs after the cold pass and its checks, and read
+  after the loop. The JVM's heap is fixed and resident from the start,
+  so its part is the heap size plus the native memory the engine uses.
 
 `--trace 1` discards one warm unit per client, then runs untraced and
 traced units in ABBA order for the window (at least four rounds) and
@@ -35,12 +41,14 @@ reports the per-layer metrics of the traced units (`layer_metrics`),
 `trace.overhead_frac`, tails, failure share and `bench.spark_canary`
 readings (`host.*`). Spans go to
 `.perfbench_work/spans-<workload>-<seed>.jsonl`. Layer times are shares
-of unit latency (`*_frac`); a layer the workload does not call reads 0.
+of unit latency (`*_frac`); a layer the workload does not call reads 0,
+so every workload prints the same metric names.
 """
 
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import os
 import shlex
@@ -77,8 +85,6 @@ LAYERS = [
 # streaming calls run their query to completion, so they have no
 # separate build phase
 NO_BUILD = {"streaming.rollup"}
-# per-layer metrics of the write path, reported on feed_ingest only
-FEED_ONLY = ("streaming.rollup.", "sources.txn.", "stream.", "txn.")
 STREAM_PHASES = {
     "add_batch": "addBatch",
     "query_planning": "queryPlanning",
@@ -99,9 +105,10 @@ def _configure_env(work: str, cpus: int, mem_mb: int) -> None:
     tmp, local = os.path.join(work, "tmp"), os.path.join(work, "local")
     os.makedirs(tmp)
     os.makedirs(local)
-    # well below physical RAM; the initial heap is the maximum, so the
-    # JVM's resident set follows what the engine retains rather than
-    # G1's heap-resizing decisions (which made it vary by a fifth)
+    # well below physical RAM. The heap is fixed in size and touched at
+    # start, so the JVM's resident set is the heap plus native memory:
+    # otherwise it follows G1's resizing and which regions it happens to
+    # touch, which made it vary by a fifth between runs
     heap_mb = min(3072, mem_mb // 4)
     confs = {
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
@@ -111,7 +118,7 @@ def _configure_env(work: str, cpus: int, mem_mb: int) -> None:
         "spark.driver.host": "127.0.0.1",
         "spark.driver.bindAddress": "127.0.0.1",
     }
-    args = ["--driver-java-options", f"-Djava.io.tmpdir={tmp} -Xms{heap_mb}m"]
+    args = ["--driver-java-options", f"-Djava.io.tmpdir={tmp} -Xms{heap_mb}m -XX:+AlwaysPreTouch"]
     for k, v in confs.items():
         args += ["--conf", f"{k}={v}"]
     os.environ.update(
@@ -135,8 +142,16 @@ def _tail(values: list[float]) -> tuple[float, float, int]:
     return v[n - 11], 100.0 * (n - 10) / n, n
 
 
+def _reset_peak_rss(pids: list[int]) -> None:
+    """Reset each process's peak resident set (VmHWM) to its current one."""
+    for pid in pids:
+        with open(f"/proc/{pid}/clear_refs", "w") as fh:
+            fh.write("5")
+
+
 def _peak_rss_mb(pids: list[int]) -> float:
-    """Summed lifetime peak resident set (VmHWM) of the processes."""
+    """Summed peak resident set (VmHWM) of the processes since their
+    last reset."""
     total = 0
     for pid in pids:
         with open(f"/proc/{pid}/status") as fh:
@@ -149,12 +164,15 @@ class Loop:
     one completes, until the window closes and it has run `min_rounds`
     units. `traced(i)` says whether a client's i-th unit runs under the
     tracer; clients move in step, so traced and untraced units see the
-    same concurrency."""
+    same concurrency. A workload whose steps are micro-batches has one
+    client, and each unit takes the streaming progress reports its
+    queries sent."""
 
-    def __init__(self, wl, tracer, traced=lambda i: False, min_rounds: int = 1) -> None:
+    def __init__(self, wl, tracer, progress_log, traced=lambda i: False, min_rounds: int = 1) -> None:
         from spans import Tracer
 
         self.wl, self.traced, self.min_rounds = wl, traced, min_rounds
+        self.progress_log = progress_log
         self._tracers = {True: tracer, False: Tracer(wl.spark, enabled=False)}
         self.units: list = []
         self.attempted = self.failed = 0
@@ -172,14 +190,15 @@ class Loop:
             try:
                 u = self.wl.unit(self._tracers[traced], uid, noop_sink)
                 u.traced = traced
-                checks, problems = (
-                    self.wl.verify_pass() if hasattr(self.wl, "verify_pass") else (0, [])
-                )
+                checks, problems = self.wl.verify_pass()
             except Exception as e:  # noqa: BLE001 - a failed unit counts, the loop goes on
                 u, checks, problems = None, 0, [f"{uid}: {type(e).__name__}: {str(e)[:300]}"]
             finally:
-                if hasattr(self.wl, "cleanup_pass"):
-                    self.wl.cleanup_pass()
+                self.wl.cleanup_pass()
+            if self.wl.steps_from_progress:
+                progress = self.progress_log.drain()
+                if u is not None:
+                    u.progress = progress
             with self._lock:
                 self.attempted += 1 + checks
                 self.failed += len(problems)
@@ -203,25 +222,27 @@ class Loop:
         return time.perf_counter() - t0
 
 
-def _summary(wl, units: list, wall: float, progress: list[dict]) -> dict:
+def _summary(wl, units: list, wall: float) -> dict:
     secs = [u.seconds for u in units]
     items = sum(u.items for u in units)
     # one client: throughput over time spent in units (the per-pass
     # checks between units are not the workload); several: wall clock
     busy = wall if wl.clients > 1 else sum(secs)
     if wl.steps_from_progress:
-        steps = [r["duration_ms"].get("triggerExecution", 0) / 1000 for r in progress if r["rows"] > 0]
+        steps = [r["duration_ms"].get("triggerExecution", 0) / 1000
+                 for u in units for r in u.progress if r["rows"] > 0]
     else:
         steps = [s for u in units for s in u.steps]
     return {"secs": secs, "items_per_s": items / busy if busy else 0.0, "steps": steps}
 
 
-def layer_metrics(tracer, wl, traced_units: list, progress: list[dict], cpus: int) -> dict:
+def layer_metrics(tracer, wl, traced_units: list, cpus: int) -> dict:
     """Per-layer metrics of the traced units. Times are shares of the
     summed unit latency; counts are per unit. A streaming query runs its
     jobs under its own run id as job group, so those groups count for
     `streaming.rollup`."""
     spans = tracer.spans
+    progress = [r for u in traced_units for r in u.progress]
     n_units = max(1, len(traced_units))
     unit_time = sum(u.seconds for u in traced_units) or 1.0
     self_t = tracer.self_times()
@@ -336,24 +357,23 @@ def _drive(args, spark, inputs, work, cpus, mem_mb, t_start, session_s) -> tuple
     progress_log.drain()
     attempted += 1
 
-    def run_checks() -> None:
-        nonlocal attempted, failed, errors
-        if cold_ok:
-            checks, problems = wl.check(sink.out, oracle_sql())
-            attempted += checks
-            failed += len(problems)
-            errors += problems
-        sink.out.clear()
-
     t = time.perf_counter()
-    if wl.check_first:  # its checks read tables the next pass replaces
-        run_checks()
-    if hasattr(wl, "cleanup_pass") and cold_ok:
-        wl.cleanup_pass()
+    if cold_ok:
+        checks, problems = wl.check(sink.out, oracle_sql())
+        attempted += checks
+        failed += len(problems)
+        errors += problems
+    wl.cleanup_pass()
+    sink.out.clear()
     phases["checks"] = time.perf_counter() - t
 
+    # the peak resident sets cover the timed loop only, not the input
+    # generation, the collected cold outputs or the DuckDB checks
     from pyspark import SparkContext
 
+    pids = {"python": os.getpid(), "jvm": SparkContext._gateway.proc.pid}
+    gc.collect()
+    _reset_peak_rss(list(pids.values()))
     t_loop = time.perf_counter()
     layer: dict[str, float] = {}
     loops = []
@@ -363,30 +383,27 @@ def _drive(args, spark, inputs, work, cpus, mem_mb, t_start, session_s) -> tuple
         # in ABBA order, so a linear trend left in the warm-up cancels
         # out of the overhead; more warm units would push a traced
         # curation run towards the per-run time limit
-        warm = Loop(wl, tracer)
+        warm = Loop(wl, tracer, progress_log)
         warm.run(0)
-        progress_log.drain()
         loops.append(warm)
         wl.rest = SparkCounters(spark)
         restore = _trace_registry(tracer)
         try:
-            loop = Loop(wl, tracer, traced=lambda i: i % 4 in (2, 3), min_rounds=4)
+            loop = Loop(wl, tracer, progress_log, traced=lambda i: i % 4 in (2, 3), min_rounds=4)
             wall = loop.run(args.seconds)
         finally:
             restore()
-        progress = progress_log.drain()
         plain = [u for u in loop.units if not u.traced]
         traced = [u for u in loop.units if u.traced]
-        layer = layer_metrics(tracer, wl, traced, progress, cpus)
+        layer = layer_metrics(tracer, wl, traced, cpus)
         tracer.dump(os.path.join(os.path.dirname(work), f"spans-{args.workload}-{args.seed}.jsonl"))
         plain_p50 = statistics.median(u.seconds for u in plain) if plain else 0.0
         traced_p50 = statistics.median(u.seconds for u in traced) if traced else 0.0
         layer["trace.overhead_frac"] = traced_p50 / plain_p50 - 1 if plain_p50 else 0.0
         traced_s = [u.seconds for u in traced]
     else:
-        loop = Loop(wl, tracer)
+        loop = Loop(wl, tracer, progress_log, min_rounds=wl.min_rounds)
         wall = loop.run(args.seconds)
-        progress = progress_log.drain()
         plain = loop.units
     loops.append(loop)
     for lp in loops:
@@ -394,21 +411,15 @@ def _drive(args, spark, inputs, work, cpus, mem_mb, t_start, session_s) -> tuple
         failed += lp.failed
         errors += lp.errors
 
-    # read before the DuckDB checks, whose memory is not the engine's
-    jvm_pid = SparkContext._gateway.proc.pid
-    rss_split = {"python": _peak_rss_mb([os.getpid()]), "jvm": _peak_rss_mb([jvm_pid])}
+    rss_split = {k: _peak_rss_mb([pid]) for k, pid in pids.items()}
     peak_rss = sum(rss_split.values())
-    t = time.perf_counter()
-    phases["loop"] = t - t_loop
-    if not wl.check_first:
-        run_checks()
-    phases["checks"] += time.perf_counter() - t
+    phases["loop"] = time.perf_counter() - t_loop
     t = time.perf_counter()
     canary = bench.spark_canary(spark) if args.trace else {}
     phases["canary"] = time.perf_counter() - t
     if args.trace and wl.counters.get("matches"):
         layer["dedup.candidates_per_match"] = wl.candidates() / wl.counters["matches"]
-    s = _summary(wl, plain, wall, progress)
+    s = _summary(wl, plain, wall)
     failed_frac = failed / attempted
     e2e = {
         "setup_s": (setup_s, "s"),
@@ -454,8 +465,6 @@ def _drive(args, spark, inputs, work, cpus, mem_mb, t_start, session_s) -> tuple
             }
         )
         layer.setdefault("dedup.candidates_per_match", 0.0)
-        if args.workload != "feed_ingest":
-            layer = {k: v for k, v in layer.items() if not k.startswith(FEED_ONLY)}
         metrics = {k: {"value": v, "unit": UNITS.get(k, _unit(k))} for k, v in layer.items()}
     else:
         metrics = {k: {"value": v, "unit": u} for k, (v, u) in e2e.items()}

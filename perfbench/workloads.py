@@ -42,6 +42,8 @@ class Unit:
     steps: list[float]
     items: int
     traced: bool = False
+    # streaming progress reports of the unit's queries
+    progress: list[dict] = field(default_factory=list)
 
 
 @dataclass
@@ -75,10 +77,18 @@ class Workload:
     samples: dict[str, list] = field(default_factory=lambda: defaultdict(list))
     counters: dict[str, float] = field(default_factory=dict)
     clients = 1
+    # units each client runs in a timed run, however short the window
+    min_rounds = 1
     # step latency: per-step timings of the unit, or the micro-batch
     # times from Spark's streaming progress reports
     steps_from_progress = False
-    check_first = False
+
+    def verify_pass(self) -> tuple[int, list[str]]:
+        """Checks run after every timed unit: (checks made, problems)."""
+        return 0, []
+
+    def cleanup_pass(self) -> None:
+        """Drops what a unit left behind, so the next one starts alike."""
 
 
 class Dashboard(Workload):
@@ -87,6 +97,7 @@ class Dashboard(Workload):
     registry panels, each to a noop sink. Two clients share a session."""
 
     clients = 2
+    min_rounds = 2
     # panel -> registry entry holding its DuckDB twin
     PANEL_ENTRY = {"downsample": "downsample_5min", "top_consumers": "topk_events"}
     ENTRIES = [
@@ -134,7 +145,7 @@ class Dashboard(Workload):
         problems = []
         for name, c in collected.items():
             ref = self.PANEL_ENTRY.get(name, name)
-            problems += [f"{name}: {p}" for p in check.against_oracle(con, oracle.get(ref), c.cols, c.rows)]
+            problems += [f"{name}: {p}" for p in check.against_oracle(con, oracle.get(ref), c)]
         con.close()
         return len(collected), problems
 
@@ -177,7 +188,7 @@ class Curation(Workload):
         con = check.duck_connection(self.inputs.sf_dir)
         problems = []
         for name, c in collected.items():
-            problems += [f"{name}: {p}" for p in check.against_oracle(con, oracle.get(name), c.cols, c.rows)]
+            problems += [f"{name}: {p}" for p in check.against_oracle(con, oracle.get(name), c)]
         con.close()
         recall_checks, recall_problems = self._recall(collected)
         return len(collected) + recall_checks, problems + recall_problems
@@ -225,7 +236,6 @@ class FeedIngest(Workload):
     keyed on event_id, vacuums, and reads the maintained rollup."""
 
     steps_from_progress = True
-    check_first = True
 
     def __init__(self, *a, **kw) -> None:
         super().__init__(*a, **kw)
@@ -309,7 +319,7 @@ class FeedIngest(Workload):
         feed = self.inputs.feed_dir
         batch = monitoring.downsample_5min(registry.load_table(spark, feed, "events"))
         got = collected["rollup"]
-        if check.rows_digest(got.cols, got.rows) != check.rows_digest(batch.columns, batch.collect()):
+        if not check.same_rows(got.cols, got.rows, batch.columns, batch.collect()):
             problems.append("stream_rollup_incremental table != downsample_5min on the same feed")
         truth = pa.concat_tables(pq.read_table(f) for f in self.inputs.feed_files)
         ids = truth.column("event_id").to_pylist()
@@ -323,8 +333,8 @@ class FeedIngest(Workload):
             problems.append(f"stream_dedup kept {len(got_ids)} rows, want {len(first)} distinct event_ids")
         cat = self._last[0]
         cat_df = cat.read(spark, "events").select(*distinct.column_names)
-        want = check.rows_digest(distinct.column_names, [tuple(r.values()) for r in distinct.to_pylist()])
-        if check.rows_digest(cat_df.columns, cat_df.collect()) != want:
+        want = [tuple(r.values()) for r in distinct.to_pylist()]
+        if not check.same_rows(cat_df.columns, cat_df.collect(), distinct.column_names, want):
             problems.append("SnapshotCatalog events table != deduplicated feed")
         n_pass, pass_problems = self.verify_pass()
         return 3 + n_pass, problems + pass_problems
@@ -334,8 +344,4 @@ def _dir_bytes(path: str) -> int:
     return sum(os.path.getsize(os.path.join(d, f)) for d, _, fs in os.walk(path) for f in fs)
 
 
-# feed_ingest runs through the same command but is not registered in
-# BENCHMARK.json: on a 4-core host its cold pass and checks (~45 s a
-# run) push three workloads' repeated runs past the benchmark's time
-# budget, so the registered pair is dashboard and curation.
 WORKLOADS = {"dashboard": Dashboard, "curation": Curation, "feed_ingest": FeedIngest}
