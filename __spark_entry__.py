@@ -161,15 +161,15 @@ def _q_paginate_page2(spark, sf):
 
 
 def _q_sql_bucket_panel(spark, sf):
-    """The raw-SQL surface end-to-end: registered views + SQL scalar
+    """The raw-SQL surface end-to-end: a registered view + SQL scalar
     UDFs (functions/sql_udfs.py), the way the reference's users write
-    their dashboards (raw SQL, no ORM)."""
+    their dashboards (raw SQL, no ORM). Only the `events` view the query
+    reads is registered: this panel runs on every dashboard refresh."""
     from real_time_database_monitoring_system_spark.functions.sql_udfs import (
         register_sql_functions,
     )
-    from real_time_database_monitoring_system_spark.sources.registry import register_views
 
-    register_views(spark, sf)
+    load_table(spark, sf, "events").createOrReplaceTempView("events")
     register_sql_functions(spark)
     return spark.sql(
         """

@@ -70,6 +70,14 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def _default_heap() -> str:
+    """24g, capped at half of physical memory (`MemTotal` on Linux): a
+    heap larger than the host lets the local JVM grow until the kernel's
+    OOM killer ends it, where a fitting heap collects garbage or spills."""
+    total_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    return f"{min(24 * 1024, total_mb // 2)}m"
+
+
 def get_local_spark(cpus: int | None = None) -> SparkSession:
     """local[N] session for tests and bench.
 
@@ -77,6 +85,13 @@ def get_local_spark(cpus: int | None = None) -> SparkSession:
     ~1-20 MB parquet files, which the 128 MB cluster default would scan
     as ONE split (serializing every scan on one core). 4 MB splits give
     the same scan parallelism the file count of a real corpus provides.
+    The same 4 MB is the one-split threshold of
+    `sources.registry.load_table`: a table at most that size is read as
+    one partition and plans with no shuffle, as a table under 128 MB
+    does on a cluster.
+
+    The heap is `SPARK_GRAFT_DRIVER_MEM` when set, else the smaller of
+    24g and half of the host's physical memory (`_default_heap`).
     """
     n = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     # local mode = one JVM for driver AND executors: the 1g default
@@ -86,7 +101,7 @@ def get_local_spark(cpus: int | None = None) -> SparkSession:
     spark = get_spark(
         master=f"local[{n}]",
         shuffle_partitions=n,
-        driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+        driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_heap(),
     )
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 * 1024 * 1024))
     spark.conf.set("spark.sql.files.openCostInBytes", str(512 * 1024))

@@ -192,19 +192,48 @@ def normalize_events_ts(df: DataFrame, ts_long: bool) -> DataFrame:
     return df
 
 
+def _one_partition_if_small(df: DataFrame) -> DataFrame:
+    """``coalesce(1)`` a scan whose size fits in one split.
+
+    Spark's bytes-per-core rule cuts even a 2 MB file into one split per
+    core and reports `UnknownPartitioning`, so every aggregate, global
+    sort, window and join above it plans a shuffle (with AQE, each
+    shuffle stage is its own job). A one-partition `CoalesceExec`
+    reports `SinglePartition`, which satisfies those operators' required
+    distributions, so a small table plans with no exchange at all. The
+    size is the optimized plan's own statistic (file-index bytes), which
+    holds on any storage; tables above the threshold keep their plan."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    split = df.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    if size <= split:
+        return df.coalesce(1)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table with its registered schema (no inference;
-    events additionally sniffs one footer to pick its ts form)."""
+    events additionally sniffs one footer to pick its ts form).
+
+    A table no larger than `spark.sql.files.maxPartitionBytes` is read
+    as ONE partition (`_one_partition_if_small`): panels over it then
+    plan with no shuffle, so a dashboard refresh over a small hot feed
+    pays no distributed-execution overhead. The rule holds at scale
+    because the threshold is Spark's own split size (128 MB on a
+    cluster), the input Spark sizes for a single task: scanning it in
+    one task costs less than scheduling the shuffles a split scan would
+    add, and a large table is never coalesced, so its plan is unchanged.
+    CPU-heavy operators still fan out through `operators.util.spread`.
+    Equal calls give equal plans, so a scan cached by one caller
+    (`operators.dashboard.snapshot_dashboard`) serves every other."""
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     configure_session(spark)
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         ts_long = events_ts_is_long(spark, sf_dir)
-        df = spark.read.schema(events_read_schema(spark, sf_dir)).parquet(
-            f"{sf_dir}/{name}.parquet"
-        )
-        return normalize_events_ts(df, ts_long)
-    return spark.read.schema(SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
+        df = spark.read.schema(events_read_schema(spark, sf_dir)).parquet(path)
+        return normalize_events_ts(_one_partition_if_small(df), ts_long)
+    return _one_partition_if_small(spark.read.schema(SCHEMAS[name]).parquet(path))
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:
