@@ -8,14 +8,9 @@ events scan once; each panel is a cheap derivation. On a cluster the
 cache is executor-memory-backed (MEMORY_AND_DISK), so the 100 TB feed
 is read from storage once per refresh cycle, not once per panel.
 
-A hot feed no larger than one scan split (`spark.sql.files.maxPartitionBytes`)
-arrives from `load_table` as ONE partition, so the cache is a single
-`SinglePartition` block and every panel — aggregates, global sorts,
-windows — plans with no shuffle: a refresh pays a job or two per panel,
-not a stage per exchange. A feed above the threshold keeps its split
-scan and the panels' shuffles, as on a cluster where it is read by many
-tasks. The registry entries (`queries()`) call `load_table` themselves
-and get the same plan, so they read this cache while it is held.
+An events feed that fits in one scan split arrives from `load_table`
+as one partition, so the panels over it plan no shuffle
+(`sources.registry._one_partition_if_small`).
 """
 
 from __future__ import annotations

@@ -71,11 +71,20 @@ def get_spark(
 
 
 def _default_heap() -> str:
-    """24g, capped at half of physical memory (`MemTotal` on Linux): a
-    heap larger than the host lets the local JVM grow until the kernel's
-    OOM killer ends it, where a fitting heap collects garbage or spills."""
-    total_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
-    return f"{min(24 * 1024, total_mb // 2)}m"
+    """24g, capped at half of the memory this process may use: physical
+    memory (`MemTotal` on Linux), or the cgroup v2 limit
+    (`/sys/fs/cgroup/memory.max`) inside a container that sets a lower
+    one. A heap larger than that lets the local JVM grow until the OOM
+    killer ends it, where a fitting heap collects garbage or spills."""
+    total = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as fh:
+            limit = fh.read().strip()
+    except OSError:
+        limit = "max"
+    if limit.isdigit():
+        total = min(total, int(limit))
+    return f"{min(24 * 1024, total // 2**20 // 2)}m"
 
 
 def get_local_spark(cpus: int | None = None) -> SparkSession:
@@ -85,13 +94,11 @@ def get_local_spark(cpus: int | None = None) -> SparkSession:
     ~1-20 MB parquet files, which the 128 MB cluster default would scan
     as ONE split (serializing every scan on one core). 4 MB splits give
     the same scan parallelism the file count of a real corpus provides.
-    The same 4 MB is the one-split threshold of
-    `sources.registry.load_table`: a table at most that size is read as
-    one partition and plans with no shuffle, as a table under 128 MB
-    does on a cluster.
+    The same 4 MB is the threshold under which `sources.registry`
+    reads the events feed as one partition (`_one_partition_if_small`).
 
     The heap is `SPARK_GRAFT_DRIVER_MEM` when set, else the smaller of
-    24g and half of the host's physical memory (`_default_heap`).
+    24g and half of the memory available (`_default_heap`).
     """
     n = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     # local mode = one JVM for driver AND executors: the 1g default

@@ -193,16 +193,27 @@ def normalize_events_ts(df: DataFrame, ts_long: bool) -> DataFrame:
 
 
 def _one_partition_if_small(df: DataFrame) -> DataFrame:
-    """``coalesce(1)`` a scan whose size fits in one split.
+    """``coalesce(1)`` the events scan when its size fits in one split.
 
     Spark's bytes-per-core rule cuts even a 2 MB file into one split per
     core and reports `UnknownPartitioning`, so every aggregate, global
     sort, window and join above it plans a shuffle (with AQE, each
     shuffle stage is its own job). A one-partition `CoalesceExec`
     reports `SinglePartition`, which satisfies those operators' required
-    distributions, so a small table plans with no exchange at all. The
-    size is the optimized plan's own statistic (file-index bytes), which
-    holds on any storage; tables above the threshold keep their plan."""
+    distributions, so the dashboard panels over a small feed plan no
+    exchange at all. The size is the optimized plan's own statistic
+    (file-index bytes), which holds on any storage; a feed above the
+    threshold keeps its split scan and its shuffles.
+
+    Only `events`, the hot feed every dashboard refresh re-reads, gets
+    this rule. The CPU-heavy operators over documents and embeddings
+    size their `operators.util.spread` width from the input's split
+    count, which a one-partition scan would collapse to its minimum.
+
+    Measured on a 4-core host with the 4 MB local threshold
+    (`session.get_local_spark`), for feeds of about half the threshold
+    and just under it; a feed near a 128 MB cluster threshold, and
+    hosts with more cores, have not been measured."""
     size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     split = df.sparkSession._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     if size <= split:
@@ -212,19 +223,9 @@ def _one_partition_if_small(df: DataFrame) -> DataFrame:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table with its registered schema (no inference;
-    events additionally sniffs one footer to pick its ts form).
-
-    A table no larger than `spark.sql.files.maxPartitionBytes` is read
-    as ONE partition (`_one_partition_if_small`): panels over it then
-    plan with no shuffle, so a dashboard refresh over a small hot feed
-    pays no distributed-execution overhead. The rule holds at scale
-    because the threshold is Spark's own split size (128 MB on a
-    cluster), the input Spark sizes for a single task: scanning it in
-    one task costs less than scheduling the shuffles a split scan would
-    add, and a large table is never coalesced, so its plan is unchanged.
-    CPU-heavy operators still fan out through `operators.util.spread`.
-    Equal calls give equal plans, so a scan cached by one caller
-    (`operators.dashboard.snapshot_dashboard`) serves every other."""
+    events additionally sniffs one footer to pick its ts form, and is
+    read as one partition when it fits in one split:
+    `_one_partition_if_small`)."""
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     configure_session(spark)
@@ -233,7 +234,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         ts_long = events_ts_is_long(spark, sf_dir)
         df = spark.read.schema(events_read_schema(spark, sf_dir)).parquet(path)
         return normalize_events_ts(_one_partition_if_small(df), ts_long)
-    return _one_partition_if_small(spark.read.schema(SCHEMAS[name]).parquet(path))
+    return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

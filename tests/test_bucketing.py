@@ -11,7 +11,7 @@ from real_time_database_monitoring_system_spark.sources.bucketing import (
     write_bucketed,
     write_date_partitioned,
 )
-from real_time_database_monitoring_system_spark.sources.registry import SCHEMAS, load_table
+from real_time_database_monitoring_system_spark.sources.registry import load_table
 
 
 def test_date_partitioned_scan_prunes(spark, sf_dir, tmp_path):
@@ -53,13 +53,8 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, bucketed_tables):
         joined = li_b.join(or_b, li_b.l_orderkey == or_b.o_orderkey)
         n_exchanges = checks.count_exchanges(joined)
         assert n_exchanges == 0, checks.explain_str(joined, "simple")
-        # same join on plain parquet shuffles both sides (read directly:
-        # load_table would coalesce these single-split tables to one
-        # partition, which plans no exchange either)
-        li_p, or_p = (
-            spark.read.schema(SCHEMAS[t]).parquet(f"{sf_dir}/{t}.parquet")
-            for t in ("lineitem", "orders")
-        )
+        # same join on plain parquet shuffles both sides
+        li_p, or_p = load_table(spark, sf_dir, "lineitem"), load_table(spark, sf_dir, "orders")
         plain = li_p.join(or_p, li_p.l_orderkey == or_p.o_orderkey)
         assert checks.count_exchanges(plain) == 2
         # and results agree

@@ -1,9 +1,9 @@
-"""`load_table` reads a table within one scan split as ONE partition.
+"""`load_table` reads an events feed within one scan split as ONE partition.
 
 A one-partition scan reports `SinglePartition`, so the dashboard's
-aggregates, global sorts and windows plan no exchange; a table above
+aggregates, global sorts and windows plan no exchange; a feed above
 `spark.sql.files.maxPartitionBytes` keeps its split scan and its
-shuffles, with the same rows.
+shuffles, with the same rows. Other tables keep their split scan.
 """
 
 from __future__ import annotations
@@ -52,6 +52,12 @@ def test_small_feed_plans_without_shuffles(spark, sf_dir):
     assert "Coalesce 1" in plan, plan
     one_split = _refresh(spark, sf_dir)
     assert {name: n for name, (n, _) in one_split.items() if n} == {}
+
+
+def test_only_the_events_feed_is_coalesced(spark, sf_dir):
+    for name in ("documents", "embeddings", "orders", "customer"):
+        plan = checks.explain_str(load_table(spark, sf_dir, name), "simple")
+        assert "Coalesce" not in plan, f"{name}:\n{plan}"
 
 
 def test_feed_above_split_keeps_shuffles_and_rows(spark, sf_dir):
